@@ -49,6 +49,7 @@ from data_engineering_capstone_project__spark.operators.relational import (
 from data_engineering_capstone_project__spark.plans.cleaner import (
     apply_clean_plan,
     build_clean_plan,
+    dictionary_map,
 )
 from data_engineering_capstone_project__spark.plans.qa import qa_compare
 from data_engineering_capstone_project__spark.sources.io import load_events
@@ -1062,21 +1063,14 @@ P3_SQL = (
 def p4_p5_clean_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4+P5+J1+J3: dictionary-driven drop/rename through the cleaning
     planner (reference :99-270 collapsed to one Project)."""
-    dict_schema = (
-        "raw_data_column string, raw_data_column_name string, "
-        "equivalent_clean_data_name string, notes string"
-    )
-    d1 = spark.createDataFrame(
+    d1 = dictionary_map(
         [
-            ("c1", "c_custkey", "customer_key", None),
-            ("c2", "c_name", "customer_name", None),
-            ("c3", "c_mktsegment", "THIS COLUMN IS NOT USED", None),
-        ],
-        dict_schema,
+            ("c_custkey", "customer_key"),
+            ("c_name", "customer_name"),
+            ("c_mktsegment", "THIS COLUMN IS NOT USED"),
+        ]
     )
-    d2 = spark.createDataFrame(
-        [("c4", "c_acctbal", "account_balance", None)], dict_schema
-    )
+    d2 = dictionary_map([("c_acctbal", "account_balance")])
     cust = _t(spark, sf_dir, "customer")
     plan = build_clean_plan(cust.columns, d1, d2, prefer=1)
     return apply_clean_plan(cust, plan)
@@ -5494,11 +5488,6 @@ FROM scaled
 """
 
 
-_DICT_SCHEMA = (
-    "raw_data_column string, raw_data_column_name string, "
-    "equivalent_clean_data_name string, notes string"
-)
-
 _LUNCH_RAW_SCHEMA = (
     "SCHOOL_NAME string, CLAIM_DATE string, DISTRICT_ID string, "
     "`PUBLIC` string, `SCHOOL TYPE` string, LUNCH_FREE string, LUNCH_RED string, "
@@ -5573,6 +5562,14 @@ _BRKF_DICT = [
 ]
 
 
+def _dict_maps():
+    """The inline lunch and breakfast dictionaries as clean-plan maps."""
+    return tuple(
+        dictionary_map((raw, clean) for _, raw, clean, _ in rows)
+        for rows in (_LUNCH_DICT, _BRKF_DICT)
+    )
+
+
 def ref_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ENTIRE pipeline end-to-end on inline fixtures
     (FIXTURES.md A1-A3 shapes): dictionary-driven clean (drop undictionaried
@@ -5587,8 +5584,7 @@ def ref_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         derive_lunch,
     )
 
-    d1 = spark.createDataFrame(_LUNCH_DICT, _DICT_SCHEMA)
-    d2 = spark.createDataFrame(_BRKF_DICT, _DICT_SCHEMA)
+    d1, d2 = _dict_maps()
     lunch_raw = spark.createDataFrame(_LUNCH_ROWS, _LUNCH_RAW_SCHEMA)
     brkf_raw = spark.createDataFrame(_BRKF_ROWS, _BRKF_RAW_SCHEMA)
 
@@ -5714,8 +5710,7 @@ def ref_multistate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         derive_lunch,
     )
 
-    d1 = spark.createDataFrame(_LUNCH_DICT, _DICT_SCHEMA)
-    d2 = spark.createDataFrame(_BRKF_DICT, _DICT_SCHEMA)
+    d1, d2 = _dict_maps()
     outs = []
     for st, excl in (("WI", None), ("MN", "Beta High")):
         lunch_raw = spark.createDataFrame(_LUNCH_ROWS, _LUNCH_RAW_SCHEMA)

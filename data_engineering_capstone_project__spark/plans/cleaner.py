@@ -5,17 +5,21 @@ data-dictionary templates, decide which columns to drop (no clean name, or
 clean name marked NOT USED) and which to rename (only clean names mapped by
 exactly one raw name), then apply. The reference spends ~500 lines of WHILE
 loops and dynamic SQL on this (``shareOurStrengthSQLCodev4.sql:99-270`` ×3
-files); here the plan is computed with two broadcast joins over
-metadata-sized DataFrames, collected to the driver (a few hundred rows — the
-data itself is never collected), and applied as ONE select.
+files); here each dictionary is collected once into a Python map
+(``collect_dictionary``), the plan is plain Python over the column names
+(no Spark job), and it is applied as ONE select.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# raw_data_column_name -> every equivalent_clean_data_name listed for it
+Dictionary = dict[str, list[str | None]]
 
 
 @dataclass
@@ -26,25 +30,44 @@ class CleanPlan:
     drops: list[str] = field(default_factory=list)
     renames: dict[str, str] = field(default_factory=dict)  # raw -> clean
 
-    @property
-    def kept_unrenamed(self) -> list[str]:
-        return []
+
+def dictionary_map(pairs: Iterable[tuple[str | None, str | None]]) -> Dictionary:
+    """Group (raw_data_column_name, equivalent_clean_data_name) pairs by
+    raw name. A NULL raw name never matches a column, as in the
+    reference's join, so it is left out."""
+    out: Dictionary = {}
+    for raw, clean in pairs:
+        if raw is not None:
+            out.setdefault(raw, []).append(clean)
+    return out
+
+
+def collect_dictionary(df: DataFrame) -> Dictionary:
+    """A dictionary template DataFrame as a ``Dictionary``, in one collect."""
+    return dictionary_map(
+        df.select("raw_data_column_name", "equivalent_clean_data_name").collect()
+    )
 
 
 def build_clean_plan(
     columns: list[str],
-    dict1: DataFrame,
-    dict2: DataFrame,
+    dict1: Dictionary,
+    dict2: Dictionary,
     prefer: int = 1,
     not_used_pattern: str = "%NOT USED%",
 ) -> CleanPlan:
     """Compute the drop/rename plan for a file's columns.
 
-    ``dict1``/``dict2`` carry (raw_data_column_name, equivalent_clean_data_name).
-    ``prefer`` selects which dictionary wins when both map a raw name — the
-    reference is asymmetric (file 1 prefers template 2 ``:100-101``, files
-    2–3 prefer template 1 ``:348-349``); we implement coalesce-with-priority
-    (the *intent* — the ``:102-103`` dead-branch bug is not replicated).
+    ``dict1``/``dict2`` map each raw name to its clean names
+    (``dictionary_map``). ``prefer`` selects which dictionary wins when
+    both map a raw name — the reference is asymmetric (file 1 prefers
+    template 2 ``:100-101``, files 2–3 prefer template 1 ``:348-349``);
+    we implement coalesce-with-priority (the *intent* — the ``:102-103``
+    dead-branch bug is not replicated).
+
+    A column gets one candidate clean name per (dict1 entry, dict2 entry)
+    pair, the rows of the reference's two LEFT JOINs: a raw name listed
+    twice in one dictionary fans out into two candidates.
 
     Rules (``:126-130`` drop, ``:172-191`` 1:1 rename):
     - clean name NULL or LIKE ``not_used_pattern`` → drop
@@ -52,31 +75,16 @@ def build_clean_plan(
       (those raw columns are *kept under their raw names* — the reference
       simply doesn't rename them).
     """
-    spark = dict1.sparkSession
-    cols_df = spark.createDataFrame([(c,) for c in columns], "name string")
-    d1 = dict1.select(
-        F.col("raw_data_column_name").alias("name"),
-        F.col("equivalent_clean_data_name").alias("clean1"),
-    )
-    d2 = dict2.select(
-        F.col("raw_data_column_name").alias("name"),
-        F.col("equivalent_clean_data_name").alias("clean2"),
-    )
-    first, second = ("clean1", "clean2") if prefer == 1 else ("clean2", "clean1")
-    lookup = (
-        cols_df.join(F.broadcast(d1), "name", "left")
-        .join(F.broadcast(d2), "name", "left")
-        .select("name", F.coalesce(F.col(first), F.col(second)).alias("clean"))
-    )
-    rows = lookup.collect()  # metadata-sized: one row per column name
-
+    first, second = (dict1, dict2) if prefer == 1 else (dict2, dict1)
     drops, candidates = [], []
-    for r in rows:
-        clean = r["clean"]
-        if clean is None or _like(clean, not_used_pattern):
-            drops.append(r["name"])
-        else:
-            candidates.append((r["name"], clean))
+    for name in columns:
+        for a in first.get(name) or [None]:
+            for b in second.get(name) or [None]:
+                clean = a if a is not None else b
+                if clean is None or _like(clean, not_used_pattern):
+                    drops.append(name)
+                else:
+                    candidates.append((name, clean))
     # 1:1 rule: a clean name used by more than one raw column is not renamed
     counts: dict[str, int] = {}
     for _, clean in candidates:

@@ -23,13 +23,17 @@ Manifest (JSON)::
       ]
     }
 
-Scale posture: each state's pipeline is an independent lazy plan
-(dictionaries broadcast, one Project per raw file); the per-state finals
-are unioned **by name** (states differ in raw columns — missing ones fill
-NULL) and written in ONE job partitioned by ``state``, so a 65-state run
-is one scan-to-write Spark job, not 65 serial scripts, and downstream
-readers get partition pruning for free. QA runs FIRST — every state's
-lazy ``qa_vs_golden`` report unioned and collected as ONE job — and
+Scale posture: planning is plain Python — each distinct dictionary is
+collected once per run into a driver-side map, raw headers are read on
+the driver, and the clean plans cost no Spark job. Each state's pipeline
+is an independent lazy plan (one Project per raw file); the per-state
+finals are unioned **by name** (states differ in raw columns — missing
+ones fill NULL) and written by ONE write action partitioned by
+``state``, not 65 serial scripts, and downstream readers get partition
+pruning for free. That action still runs about two adaptive-execution
+exchange jobs per state, because the plan carries one linkage join and
+one DISTINCT per state. QA runs FIRST — every state's
+lazy ``qa_vs_golden`` report unioned and collected by ONE action — and
 gates the write (a failing run never clobbers the previous good output);
 the CLI exits non-zero if any state fails, printing a bounded
 ``qa_diff`` sample (the reference's INTERSECT-count method says *that*
@@ -52,9 +56,16 @@ from data_engineering_capstone_project__spark.plans.derive import (
     derive_breakfast,
     derive_lunch,
 )
+from data_engineering_capstone_project__spark.plans.cleaner import (
+    Dictionary,
+    collect_dictionary,
+)
 from data_engineering_capstone_project__spark.plans.pipeline import clean_file
 from data_engineering_capstone_project__spark.plans.qa import qa_diff, qa_vs_golden
-from data_engineering_capstone_project__spark.sources.io import read_tsv
+from data_engineering_capstone_project__spark.sources.io import (
+    read_parquet_cached,
+    read_tsv,
+)
 
 QA_ROLLUP_SCHEMA = (
     "state string, count_a long, count_b long, count_common long, "
@@ -111,13 +122,14 @@ def load_manifest(path: str) -> tuple[list[StateSpec], str | None]:
 
 def state_final(spark: SparkSession, spec: StateSpec, dict_cache: dict | None = None) -> DataFrame:
     """One state through the full reference flow (ingest → clean → derive
-    → assemble), tagged with its ``state``. Dictionaries are read once per
-    distinct path across the whole run via ``dict_cache``."""
+    → assemble), tagged with its ``state``. Each distinct dictionary path
+    is read and collected once across the whole run via ``dict_cache``;
+    everything else here launches no Spark job."""
     cache = dict_cache if dict_cache is not None else {}
 
-    def _dict(p: str) -> DataFrame:
+    def _dict(p: str) -> Dictionary:
         if p not in cache:
-            cache[p] = read_tsv(spark, p)
+            cache[p] = collect_dictionary(read_tsv(spark, p))
         return cache[p]
 
     d1, d2 = _dict(spec.dict1), _dict(spec.dict2)
@@ -136,10 +148,11 @@ def qa_rollup_rows(
     """Per-state QA report rows in ONE Spark action: each golden-bearing
     state's ``qa_vs_golden`` is a lazy one-row plan (see that docstring),
     tagged with its state, unioned across all states and collected once —
-    65 states cost one rollup job, not 65 serial small jobs. Golden-less
+    65 states cost one rollup action, not 65 serial small ones. Goldens
+    are write-once user files, read through the schema cache. Golden-less
     states get a literal skip row driver-side (no job at all)."""
     reports = [
-        qa_vs_golden(df, spark.read.parquet(spec.golden)).select(
+        qa_vs_golden(df, read_parquet_cached(spark, spec.golden)).select(
             F.lit(spec.state).alias("state"),
             F.col("count_a").cast("long").alias("count_a"),
             F.col("count_b").cast("long").alias("count_b"),
@@ -191,18 +204,20 @@ def run_multistate(
 
     Two scale/safety properties:
 
-    - **The rollup is ONE Spark job**, not one per state: every state's
-      ``qa_vs_golden`` report is a lazy one-row plan, tagged with its
-      ``state`` and unioned, then collected once — 65 states cost one
-      write + one rollup action, not 1 + 65 serial jobs queueing on a
-      busy cluster.
+    - **The rollup is ONE Spark action**, not one per state: every
+      state's ``qa_vs_golden`` report is a lazy one-row plan, tagged with
+      its ``state`` and unioned, then collected once — 65 states cost one
+      write + one rollup action, not 1 + 65 serial actions queueing on a
+      busy cluster. Planning adds one collect per distinct dictionary;
+      each action still fans out into adaptive-execution jobs that grow
+      with the state count (about two exchanges per state in the write).
     - **QA gates the write**: the rollup runs FIRST and the combined
       output is written only when no state failed (or
       ``write_on_qa_fail=True``), so a QA-failing run exits non-zero
       *without* having clobbered the previous good dataset at
       ``output_path``.
     """
-    dict_cache: dict[str, DataFrame] = {}
+    dict_cache: dict[str, Dictionary] = {}
     finals: list[tuple[StateSpec, DataFrame]] = [
         (spec, state_final(spark, spec, dict_cache)) for spec in specs
     ]
@@ -238,7 +253,7 @@ def print_qa_failures(
         print(f"state {r['state']}: QA FAILED ({r['note'] or 'row mismatch'})")
         if spec.golden is None or r["note"]:
             continue  # schema-level mismatch already explained by note
-        golden = spark.read.parquet(spec.golden)
+        golden = read_parquet_cached(spark, spec.golden)
         produced = state_final(spark, spec, dict_cache).select(*golden.columns)
         for row in qa_diff(produced, golden).limit(2 * sample).collect():
             side = "produced-only" if row["side"] == "A" else "golden-only"

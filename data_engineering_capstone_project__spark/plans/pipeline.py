@@ -10,9 +10,10 @@ file). This module is that product on Spark: point it at the same files.
         --dict1 template1.tsv --dict2 template2.tsv \
         --out /path/final_parquet [--golden golden.parquet]
 
-Scale posture: dictionaries are broadcast; the raw files stream through one
-Project each; the only shuffles are the final record-linkage join and the
-DISTINCT (see SCALE.md).
+Scale posture: each dictionary is collected once into a driver-side map
+and the clean plans are plain Python over the raw headers; the raw files
+stream through one Project each; the only shuffles are the final
+record-linkage join and the DISTINCT (see SCALE.md).
 """
 
 from __future__ import annotations
@@ -22,8 +23,10 @@ import argparse
 from pyspark.sql import DataFrame, SparkSession
 
 from data_engineering_capstone_project__spark.plans.cleaner import (
+    Dictionary,
     apply_clean_plan,
     build_clean_plan,
+    collect_dictionary,
 )
 from data_engineering_capstone_project__spark.plans.derive import (
     assemble_final,
@@ -37,8 +40,8 @@ from data_engineering_capstone_project__spark.sources.io import read_tsv, write_
 def clean_file(
     spark: SparkSession,
     path: str,
-    dict1: DataFrame,
-    dict2: DataFrame,
+    dict1: Dictionary,
+    dict2: Dictionary,
     prefer: int,
 ) -> DataFrame:
     """Ingest one raw TSV and apply its dictionary-driven clean plan
@@ -63,8 +66,8 @@ def run_reference_pipeline(
     Template priority mirrors the reference asymmetry (SURVEY §1.3): the
     breakfast file prefers template 2, the lunch file template 1.
     """
-    dict1 = read_tsv(spark, dict1_path)
-    dict2 = read_tsv(spark, dict2_path)
+    dict1 = collect_dictionary(read_tsv(spark, dict1_path))
+    dict2 = collect_dictionary(read_tsv(spark, dict2_path))
     lunch = derive_lunch(clean_file(spark, lunch_path, dict1, dict2, prefer=1))
     breakfast = derive_breakfast(
         clean_file(spark, breakfast_path, dict1, dict2, prefer=2)

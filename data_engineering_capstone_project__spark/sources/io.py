@@ -3,21 +3,23 @@
 The reference loads tab-delimited text with a header-probe + generated
 ``CREATE TABLE`` + ``BULK INSERT`` dance (~40 lines per file,
 ``shareOurStrengthSQLCodev4.sql:25-64``). Spark's CSV reader subsumes the
-whole mechanism: ``header=True`` is the schema probe, all-string loading is
-``inferSchema=False`` (the reference's "all columns are varchar(1000)"
-stance, ``:42``), and column-name sanitation is driver-side Python.
+whole mechanism: the header line is the schema probe (parsed on the driver
+for local files, ``read_tsv``), all-string loading is ``inferSchema=False``
+(the reference's "all columns are varchar(1000)" stance, ``:42``), and
+column-name sanitation is driver-side Python.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import stat as stat_mod
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 TPCH_TABLES = (
     "region",
@@ -46,21 +48,103 @@ def read_tsv(
     (``shareOurStrengthSQLCodev4.sql:9-11``) and its header-derived
     all-varchar schema (``:49-61``). ``sanitize`` reproduces the header
     cleanup at ``:35`` (strip stray artifacts/quotes, trim whitespace).
+
+    For a local file the header is read on the driver (``_spark_header``)
+    and passed as an explicit all-string schema, so building the frame
+    launches no Spark job; directories, globs, remote URIs and headers
+    outside the parsed subset take Spark's header-inferring read.
     """
-    df = spark.read.options(sep=sep, header=header, inferSchema=False).csv(path)
+    names = _spark_header(spark, path, sep) if header else None
+    if names is None:
+        df = spark.read.options(sep=sep, header=header, inferSchema=False).csv(path)
+    else:
+        schema = StructType([StructField(n, StringType()) for n in names])
+        df = spark.read.schema(schema).options(sep=sep, header=True).csv(path)
     if sanitize:
-        cleaned = [c.strip().strip('"').replace("﻿", "") for c in df.columns]
+        cleaned = [c.strip().strip('"').replace("\ufeff", "") for c in df.columns]
         if cleaned != df.columns:
             df = df.toDF(*cleaned)
     return df
 
 
 def probe_header(spark: SparkSession, path: str) -> list[str]:
-    """S2: header-only read (``FirstRow=1, LastRow=1``, ``:26-28``)."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
+    """S2: header-only read (``FirstRow=1, LastRow=1``, ``:26-28``): the
+    column names ``read_tsv`` gives, without a Spark job for local files."""
+    return read_tsv(spark, path).columns
+
+
+def _first_line(path: str) -> str | None:
+    """The line Spark's CSV reader takes as the header of a local file:
+    the first one that is not empty after trimming spaces, lines ending at
+    ``\\n``, ``\\r`` or ``\\r\\n``. A UTF-8 BOM is dropped at the start
+    of the file (the line reader) and again at the start of the line (the
+    CSV parser). None when there is no such line."""
+    with open(path, "rb") as f:
+        chunk = f.read(1 << 16)
+        buf = chunk.removeprefix(b"\xef\xbb\xbf")
+        while True:
+            lines = re.split(rb"\r\n?|\n", buf)
+            for line in lines[:-1] if chunk else lines:
+                if line.strip(b" "):  # Spark's SQL trim: spaces only
+                    return line.decode("utf-8", "replace").removeprefix("\ufeff")
+            if not chunk:
+                return None
+            chunk = f.read(1 << 16)
+            buf = lines[-1] + chunk
+
+
+def _split_fields(line: str, sep: str) -> list[str] | None:
+    """Cells of one line as Spark's CSV parser splits it (quote ``"``):
+    a cell that starts with a quote is unquoted and may contain ``sep``,
+    any other cell is taken as is. None for lines outside that subset
+    (a backslash escape in the line or in ``sep``, text after a closing
+    quote, an unclosed quote), which the caller leaves to Spark."""
+    if "\\" in line or "\\" in sep:
+        return None
+    cells, i, n = [], 0, len(line)
+    while True:
+        if line.startswith('"', i):
+            end = line.find('"', i + 1)
+            if end < 0 or not (end + 1 == n or line.startswith(sep, end + 1)):
+                return None
+            cells.append(line[i + 1:end])
+            i = end + 1
+        else:
+            end = line.find(sep, i)
+            end = n if end < 0 else end
+            cells.append(line[i:end])
+            i = end
+        if i >= n:
+            return cells
+        i += len(sep)
+
+
+def _spark_header(spark: SparkSession, path: str, sep: str) -> list[str] | None:
+    """Column names Spark's header-inferring CSV read gives a local
+    regular file, computed in Python: empty cells become ``_c<i>`` and
+    names repeated (case-insensitively unless ``spark.sql.caseSensitive``)
+    get their index as suffix. None when ``path`` is not a plain local
+    file (or is one Spark's file listing hides: ``_*``, ``.*``) or its
+    header line is outside ``_split_fields``'s subset."""
+    if (
+        any(ch in path for ch in "*?[]{}:")
+        or os.path.basename(path)[:1] in ("_", ".")
+        or not os.path.isfile(path)
+    ):
+        return None
+    line = _first_line(path)
+    if line is None:
         return []
-    return [c.strip().strip('"') for c in first[0][0].split("\t")]
+    cells = _split_fields(line, sep)
+    if cells is None:
+        return None
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false") == "true"
+    keys = [c if case_sensitive else c.lower() for c in cells]
+    seen = Counter(keys)
+    return [
+        f"_c{i}" if not c else f"{c}{i}" if seen[k] > 1 else c
+        for i, (c, k) in enumerate(zip(cells, keys))
+    ]
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -7,6 +7,7 @@ import pytest
 from data_engineering_capstone_project__spark.plans.cleaner import (
     apply_clean_plan,
     build_clean_plan,
+    collect_dictionary,
 )
 
 DICT_SCHEMA = (
@@ -34,7 +35,7 @@ def _dicts(spark):
         ],
         DICT_SCHEMA,
     )
-    return d1, d2
+    return collect_dictionary(d1), collect_dictionary(d2)
 
 
 def test_plan_rules(spark):

@@ -79,6 +79,41 @@ def test_write_csv_roundtrip(spark, tmp_path):
     assert {(r["name"], r["val"]) for r in back.collect()} == {("a", "1"), ("b", "2")}
 
 
+# header layouts whose column names Spark's CSV reader derives itself:
+# read_tsv must reproduce them without running its header-inference job
+HEADER_CASES = {
+    "bom": b"\xef\xbb\xbfa\tb\n1\t2\n",
+    "crlf": b"a\tb\r\n1\t2\r\n",
+    "quoted": b'"a b"\tc\n1\t2\n',
+    "quoted_tab": b'"a\tb"\tc\n1\t2\n',
+    "case_dups": b"A\ta\tA\n1\t2\t3\n",
+    "empty_cell": b"a\t\tc\n1\t2\t3\n",
+    "empty_file": b"",
+}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_read_tsv_header_parity(spark, tmp_path, case):
+    """read_tsv's driver-side header parse gives the names and first row
+    Spark's header-inferring read gives, and launches no Spark job."""
+    from data_engineering_capstone_project__spark.sources.io import read_tsv
+
+    p = tmp_path / f"{case}.tsv"
+    p.write_bytes(HEADER_CASES[case])
+    sc = spark.sparkContext
+    sc.setJobGroup("header_parity", "header_parity")
+    try:
+        df = read_tsv(spark, str(p), sanitize=False)
+        columns = df.columns
+        jobs = sc.statusTracker().getJobIdsForGroup("header_parity")
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs == []
+    inferred = spark.read.options(sep="\t", header=True, inferSchema=False).csv(str(p))
+    assert columns == inferred.columns
+    assert df.head() == inferred.head()
+
+
 def test_read_parquet_evolving_schema_merge(spark, tmp_path):
     """Two batches with different columns union with NULL fill."""
     from data_engineering_capstone_project__spark.sources.io import (

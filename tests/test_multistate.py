@@ -288,6 +288,40 @@ def test_multistate_rollup_single_job_and_qa_gated_write(spark, manifest_dir):
     assert os.path.isdir(out2)
 
 
+def test_planning_jobs_one_per_distinct_dictionary(spark, manifest_dir):
+    """Planning three states (read, clean plan, derive, assemble) launches
+    one Spark job per distinct dictionary path, the collect of that
+    dictionary, and none per raw file: headers are read on the driver and
+    clean plans are plain Python."""
+    import shutil
+
+    from data_engineering_capstone_project__spark.plans import multistate as ms
+
+    d, mpath = manifest_dir
+    specs, _ = ms.load_manifest(mpath)
+    own = os.path.join(d, "dict1_cc.tsv")
+    shutil.copy(specs[0].dict1, own)
+    specs = [
+        s if s.state != "CC"
+        else ms.StateSpec(
+            state=s.state, lunch=s.lunch, breakfast=s.breakfast,
+            dict1=own, dict2=s.dict2,
+        )
+        for s in specs
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("plan_jobs", "plan_jobs")
+    try:
+        dict_cache = {}
+        finals = [ms.state_final(spark, s, dict_cache) for s in specs]
+        jobs = sc.statusTracker().getJobIdsForGroup("plan_jobs")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sorted(dict_cache) == sorted({specs[0].dict1, specs[0].dict2, own})
+    assert len(jobs) == len(dict_cache) == 3
+    assert all(f.count() == 3 for f in finals)
+
+
 def F_substr_3(col):
     from pyspark.sql import functions as F
 

@@ -66,32 +66,74 @@ def test_pround_and_pad_batch(spark):
         assert gp[i] == ("000000" + v)[-6:], (i, v)
 
 
+def _joined_plan(spark, cols, d1_rows, d2_rows, prefer):
+    """(sorted drops, renames) as two Spark LEFT JOINs of the column names
+    against the dictionaries give them — the reference's metadata-table
+    plan, kept here as the oracle for the driver-side planner."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    cols_df = spark.createDataFrame([(c,) for c in cols], "name string")
+    d1, d2 = (
+        spark.createDataFrame([(r[1], r[2]) for r in rows], f"name string, {c} string")
+        for rows, c in ((d1_rows, "clean1"), (d2_rows, "clean2"))
+    )
+    first, second = ("clean1", "clean2") if prefer == 1 else ("clean2", "clean1")
+    rows = (
+        cols_df.join(d1, "name", "left")
+        .join(d2, "name", "left")
+        .select("name", F.coalesce(first, second).alias("clean"))
+        .collect()
+    )
+    dropped = [(n, c) for n, c in rows if c is None or "NOT USED" in c]
+    cands = [(n, c) for n, c in rows if (n, c) not in dropped]
+    counts = Counter(c for _, c in cands)
+    return sorted(n for n, _ in dropped), {n: c for n, c in cands if counts[c] == 1}
+
+
 def test_clean_plan_partition_invariants(spark):
     """build_clean_plan invariants on an adversarial dictionary: every input
     column is dropped XOR renamed XOR kept-raw; rename targets are unique;
-    NOT-USED and NULL-mapped columns always drop."""
-    from data_engineering_capstone_project__spark.plans.cleaner import build_clean_plan
+    NOT-USED and NULL-mapped columns always drop. Raw names listed twice in
+    one dictionary fan out into one candidate per entry and NULL raw names
+    match nothing, exactly as the reference's two LEFT JOINs do."""
+    from data_engineering_capstone_project__spark.plans.cleaner import (
+        build_clean_plan,
+        collect_dictionary,
+    )
 
     schema = (
         "raw_data_column string, raw_data_column_name string, "
         "equivalent_clean_data_name string, notes string"
     )
-    d1 = spark.createDataFrame(
-        [
-            ("x", "col_a", "Clean A", None),
-            ("x", "col_b", None, None),
-            ("x", "col_c", "marked NOT USED here", None),
-            ("x", "col_d", "Shared Clean", None),
-            ("x", "col_e", "Shared Clean", None),
-            ("x", "col_f", "From D1", None),
-        ],
-        schema,
-    )
-    d2 = spark.createDataFrame(
-        [("y", "col_f", "From D2", None), ("y", "col_g", "Clean G", None)], schema
-    )
+    d1_rows = [
+        ("x", "col_a", "Clean A", None),
+        ("x", "col_b", None, None),
+        ("x", "col_b", None, None),
+        ("x", "col_c", "marked NOT USED here", None),
+        ("x", "col_d", "Shared Clean", None),
+        ("x", "col_e", "Shared Clean", None),
+        ("x", "col_f", "From D1", None),
+        ("x", "col_h", "Clean H", None),
+        ("x", "col_h", "Clean H", None),
+        ("x", None, "Clean A", None),
+    ]
+    d2_rows = [
+        ("y", "col_f", "From D2", None),
+        ("y", "col_g", "Clean G", None),
+        ("y", "col_h", "From D2 H", None),
+        ("y", "col_k", "Clean K", None),
+        ("y", "col_k", "Clean K", None),
+        ("y", None, "Clean G", None),
+    ]
+    d1 = collect_dictionary(spark.createDataFrame(d1_rows, schema))
+    d2 = collect_dictionary(spark.createDataFrame(d2_rows, schema))
+    cols = [
+        "col_a", "col_b", "col_c", "col_d", "col_e", "col_f", "col_g",
+        "col_h", "col_k", "col_z",
+    ]
     for prefer in (1, 2):
-        cols = ["col_a", "col_b", "col_c", "col_d", "col_e", "col_f", "col_g", "col_z"]
         plan = build_clean_plan(cols, d1, d2, prefer=prefer)
         for c in cols:
             dropped, renamed = c in plan.drops, c in plan.renames
@@ -99,10 +141,19 @@ def test_clean_plan_partition_invariants(spark):
         assert {"col_b", "col_c", "col_z"} <= set(plan.drops)
         # duplicate clean target -> kept raw, not renamed
         assert "col_d" not in plan.renames and "col_e" not in plan.renames
+        # a raw name listed twice fans out into two equal candidates -> kept raw
+        for c in ("col_h", "col_k"):
+            assert c not in plan.renames and c not in plan.drops, c
+        # NULL raw names match nothing: Clean A and Clean G stay 1:1
+        assert plan.renames["col_a"] == "Clean A"
+        assert plan.renames["col_g"] == "Clean G"
         # rename targets unique
         vals = list(plan.renames.values())
         assert len(vals) == len(set(vals))
         assert plan.renames["col_f"] == ("From D1" if prefer == 1 else "From D2")
+        assert (sorted(plan.drops), plan.renames) == _joined_plan(
+            spark, cols, d1_rows, d2_rows, prefer
+        )
 
 
 def test_pround_matches_duckdb_on_random_doubles(spark):
