@@ -2151,12 +2151,8 @@ def append_published_raw(
         verified = mh_meta.get("kind") == "minhash_docs"
         _check_lease_generation(root, gen)
         corpus_v, claim_target = commitlog.claim_version(corpus_path)
-        to_publish = rows.withColumn(
-            _ARRIVAL,
-            F.coalesce(F.col(_ARRIVAL).cast("long"), F.lit(0)),
-        )
-        to_publish.write.mode("overwrite").parquet(claim_target)
-        _write_schema_note(to_publish, corpus_path, corpus_v)
+        rows.write.mode("overwrite").parquet(claim_target)
+        _write_schema_note(rows, corpus_path, corpus_v)
         body = rows.drop(_ARRIVAL)
         dg = f"delta:{art.corpus_digest(body, [id_col, text_col])}"
         tick_meta = {"batch_digest": dg, "publish_version": corpus_v}
@@ -2348,93 +2344,6 @@ def compact_publication_log(
                 # latest tick markers must survive (recovery + trigger)
                 art.compact_ivf_log(spark, os.path.join(root, _IVF))
         return v
-    finally:
-        if lease:
-            release_ingest_lease(root, gen)
-
-
-def backfill_arrival_stamp(
-    spark: SparkSession,
-    root: str,
-    round_for_version=None,
-    lease: bool = True,
-) -> tuple[int, int]:
-    """One-shot STAMPED compaction for a pre-stamp publication log
-    (VERDICT r14 #4): rows published before per-doc arrival stamps
-    existed read as round 0 — "earliest" — which is the correct
-    posture against LATER content but leaves a mixed root's round-0
-    near-dup ties permanently unretireable against EACH OTHER. The
-    pre-stamp arrival clock was the corpus VERSION number itself
-    (each tick stamped its claimed corpus version before the global
-    round ledger existed), and the version directories still carry
-    it — so, per visible version, unstamped rows (a missing column or
-    a NULL stamp) are stamped with THAT VERSION's number and the log
-    folds into one fully-stamped version under the same crash-safe
-    ``_FOLDS``-note protocol as compaction. Rows that already carry a
-    stamp are untouched, so the call is idempotent and safe on a
-    half-upgraded log.
-
-    ``round_for_version`` (optional ``int -> int``) overrides the
-    version→round mapping for operators who know their history (e.g.
-    everything-is-bootstrap → ``lambda v: 1``). LIMITATION, disclosed:
-    a log COMPACTED while unstamped has already folded its version
-    history away — its rows all stamp with the fold's version number,
-    i.e. one shared round, which preserves the previous tie semantics
-    rather than inventing an order that was never recorded.
-
-    Returns ``(folded_version, max_round)`` — max_round is the
-    largest stamp now present (the sharded wrapper seeds the round
-    ledger with it so the next tick claims strictly later)."""
-    import json as _json
-    import shutil
-
-    from data_engineering_capstone_project__spark.sources import commitlog
-
-    path = os.path.join(root, _CORPUS)
-    gen = acquire_ingest_lease(root) if lease else None
-    try:
-        _heal_pending_retirement(spark, root, gen)
-        vs = _visible_corpus_versions(path)
-        if not vs:
-            raise FileNotFoundError(
-                f"no committed publication under {path!r} — nothing to "
-                "backfill"
-            )
-        leftovers = [
-            v for v in commitlog.committed_versions(path) if v not in vs
-        ]
-        parts = []
-        for v in vs:
-            df = spark.read.parquet(os.path.join(path, f"v={v}"))
-            rnd = int(round_for_version(v)) if round_for_version else int(v)
-            if _ARRIVAL in df.columns:
-                df = df.withColumn(
-                    _ARRIVAL,
-                    F.coalesce(
-                        F.col(_ARRIVAL).cast("long"), F.lit(rnd)
-                    ),
-                )
-            else:
-                df = df.withColumn(_ARRIVAL, F.lit(rnd).cast("long"))
-            parts.append(df)
-        full = parts[0]
-        for p in parts[1:]:
-            full = full.unionByName(p, allowMissingColumns=True)
-        _check_lease_generation(root, gen)
-        v = claim_versioned_write(full, path)
-        _write_schema_note(full, path, v)
-        with open(os.path.join(path, f"v={v}", _FOLDS_NOTE), "w") as f:
-            _json.dump(sorted(set(vs) | set(leftovers)), f)
-        _check_lease_generation(root, gen)
-        commit_versioned(path, v)
-        for old in leftovers + vs:
-            shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
-        mx = (
-            spark.read.parquet(os.path.join(path, f"v={v}"))
-            .agg(F.max(F.col(_ARRIVAL).cast("long")))
-            .first()[0]
-        )
-        return v, int(mx or 0)
     finally:
         if lease:
             release_ingest_lease(root, gen)

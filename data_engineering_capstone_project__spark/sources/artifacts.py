@@ -12,7 +12,6 @@ Storage layout — the versioned-snapshot idiom of ``write_versioned``
 (``sources/io.py``) generalized to multi-part artifacts::
 
     path/
-      LATEST              <- ADVISORY cache (monotone, best-effort)
       v=1/
         _CLAIM            <- put-if-absent version claim
         _META.json        <- params + framework versions + corpus digest

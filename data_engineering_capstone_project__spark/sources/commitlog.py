@@ -32,13 +32,6 @@ resolves; re-running it claims a fresh n. Directory creation for the
 local filesystem is a non-protocol convenience (object stores have no
 directories); no step relies on atomic rename or atomic mkdir.
 
-A human-readable ``LATEST`` pointer file is still maintained as an
-ADVISORY CACHE — written monotonically and best-effort (failures
-ignored), never consulted by resolution when any marker exists. Readers
-of legacy pointer-protocol layouts (no markers anywhere, pointer
-present) keep working: the pointer bounds the committed set exactly as
-the old protocol defined it.
-
 Spark's own parquet part files are committed by its FileOutputCommitter
 (rename-based locally; use an object-store committer — e.g. the S3A
 magic committer — there). This module only governs snapshot VISIBILITY:
@@ -53,7 +46,6 @@ import os
 _CLAIM = "_CLAIM"
 _COMMITTED = "_COMMITTED"
 _FENCED = "_FENCED"
-LATEST = "LATEST"
 
 __all__ = [
     "claim_version",
@@ -96,46 +88,11 @@ def all_versions(path: str) -> list[int]:
     )
 
 
-def _migrate_legacy_pointer(path: str) -> None:
-    """One-time legacy migration (ADVICE r8): a pre-marker store (LATEST
-    pointer present, ZERO ``_COMMITTED`` markers) resolves by the
-    pointer-bounded fallback in :func:`committed_versions` — but the
-    FIRST new-protocol commit stamps a marker and flips resolution to
-    marker-only, silently un-committing every pointer-era version (the
-    ingest publication log would lose its bootstrap corpus and every
-    prior batch; the verified tick's candidate text fetch would go
-    empty and near-duplicates would publish). So before any new write
-    claims a version on such a store, stamp markers for every version
-    the pointer committed. Idempotent and race-safe: concurrent
-    migrators collide on put-if-absent and ignore the loss."""
-    vs = all_versions(path)
-    if not vs:
-        return
-    if any(
-        os.path.exists(os.path.join(path, f"v={v}", _COMMITTED)) for v in vs
-    ):
-        return
-    try:
-        with open(os.path.join(path, LATEST)) as f:
-            latest = int(f.read().strip())
-    except (FileNotFoundError, ValueError, OSError):
-        return
-    for v in vs:
-        if v <= latest:
-            try:
-                _put_if_absent(os.path.join(path, f"v={v}", _COMMITTED))
-            except FileExistsError:
-                pass
-
-
 def claim_version(path: str) -> tuple[int, str]:
     """Claim the next free version number via put-if-absent of the
     ``_CLAIM`` marker; returns ``(n, snapshot_dir)``. Exactly one writer
-    wins each n under any interleaving; losers retry n+1. On a legacy
-    pointer-only layout, first stamps ``_COMMITTED`` markers for every
-    pointer-committed version (:func:`_migrate_legacy_pointer`)."""
+    wins each n under any interleaving; losers retry n+1."""
     os.makedirs(path, exist_ok=True)
-    _migrate_legacy_pointer(path)
     n = max(all_versions(path), default=0)
     while True:
         n += 1
@@ -200,8 +157,7 @@ def commit_version(path: str, n: int) -> None:
     :class:`FencedVersionError` when the claim was fenced by a lease
     break (the marker is still not written then; and even a marker that
     slips in between the fence check and a racing fence stays invisible
-    — resolution excludes fenced versions). Also advances the advisory
-    ``LATEST`` cache, monotonically and best-effort."""
+    — resolution excludes fenced versions)."""
     if is_fenced(path, n):
         raise FencedVersionError(
             f"v={n} under {path!r} was fenced by a lease break: this "
@@ -209,63 +165,23 @@ def commit_version(path: str, n: int) -> None:
             "cannot be published"
         )
     _put_if_absent(os.path.join(path, f"v={n}", _COMMITTED))
-    try:
-        p = os.path.join(path, LATEST)
-        cur = -1
-        if os.path.exists(p):
-            with open(p) as f:
-                txt = f.read().strip()
-            cur = int(txt) if txt else -1
-        if n > cur:
-            # plain write: the cache may transiently hold a torn value —
-            # resolution never trusts it when a marker exists
-            with open(p, "w") as f:
-                f.write(str(n))
-    except Exception:
-        pass  # advisory only
 
 
 def committed_versions(path: str) -> list[int]:
     """Versions a reader may resolve: those with a ``_COMMITTED`` marker
-    and no ``_FENCED`` marker (fence wins — see :func:`fence_version`).
-    Legacy pointer-protocol layouts (no marker anywhere, ``LATEST``
-    present) resolve exactly as the old protocol defined: every listed
-    version ≤ the pointer."""
-    vs = all_versions(path)
-    out = [
+    and no ``_FENCED`` marker (fence wins — see :func:`fence_version`)."""
+    return [
         v
-        for v in vs
+        for v in all_versions(path)
         if os.path.exists(os.path.join(path, f"v={v}", _COMMITTED))
         and not os.path.exists(os.path.join(path, f"v={v}", _FENCED))
     ]
-    if out:
-        return out
-    # legacy fallback applies ONLY to pre-marker layouts: if ANY
-    # _COMMITTED marker exists, this is a marker-protocol log whose
-    # visible set is genuinely empty (e.g. every committed version was
-    # fenced) — the pointer must not resurrect fenced versions, fence
-    # wins regardless of marker ordering.
-    if any(
-        os.path.exists(os.path.join(path, f"v={v}", _COMMITTED)) for v in vs
-    ):
-        return []
-    try:
-        with open(os.path.join(path, LATEST)) as f:
-            latest = int(f.read().strip())
-        return [
-            v
-            for v in vs
-            if v <= latest
-            and not os.path.exists(os.path.join(path, f"v={v}", _FENCED))
-        ]
-    except (FileNotFoundError, ValueError, OSError):
-        return []
 
 
 def latest_version(path: str) -> int:
     """The committed snapshot: ``max(committed_versions)`` — monotone
     under concurrent writers. Raises ``FileNotFoundError`` when nothing
-    was ever committed (parity with the old missing-pointer error)."""
+    was ever committed."""
     vs = committed_versions(path)
     if not vs:
         raise FileNotFoundError(

@@ -524,7 +524,7 @@ def snapshot_diff(
 ) -> DataFrame:
     """Row-level change-data-capture between two committed snapshot
     versions of a versioned sink: every row of ``v_new`` (default: the
-    committed LATEST) not in ``v_old`` tagged ``_change='insert'``, every
+    latest committed version) not in ``v_old`` tagged ``_change='insert'``, every
     row of ``v_old`` not in ``v_new`` tagged ``'delete'`` — an update is
     a delete+insert pair, exactly the semantics a downstream incremental
     consumer (index maintenance, dedup-fingerprint refresh, cache

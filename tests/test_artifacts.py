@@ -78,9 +78,6 @@ def test_latest_monotone_under_interleaved_writers(spark, tmp_path):
     # a reader never observes the version going backwards
     assert commitlog.latest_version(p) == 2
     assert art.load_artifact_meta(p)["tag"] == "fast"
-    # the advisory pointer cache did not regress either
-    with open(os.path.join(p, "LATEST")) as f:
-        assert f.read().strip() == "2"
     # the slow commit is still readable pinned (it IS committed)
     assert art.load_artifact_meta(p, version=1)["tag"] == "slow"
     assert commitlog.committed_versions(p) == [1, 2]
@@ -123,28 +120,6 @@ def test_protocol_needs_no_rename_or_atomic_mkdir(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(commitlog, "all_versions", lambda _p: [])
     n, _ = commitlog.claim_version(p2)
     assert n == 2
-
-
-def test_legacy_pointer_layout_still_readable(spark, tmp_path):
-    """Pre-round-8 artifacts (LATEST pointer, no _COMMITTED markers)
-    resolve exactly as the old protocol defined."""
-    import json
-
-    from data_engineering_capstone_project__spark.sources import commitlog
-
-    p = str(tmp_path / "legacy")
-    os.makedirs(os.path.join(p, "v=1"))
-    spark.range(4).write.mode("overwrite").parquet(
-        os.path.join(p, "v=1", "m")
-    )
-    with open(os.path.join(p, "v=1", "_META.json"), "w") as f:
-        json.dump({"parts": ["m"], "tag": "old"}, f)
-    os.makedirs(os.path.join(p, "v=2"))  # orphan claim beyond pointer
-    with open(os.path.join(p, "LATEST"), "w") as f:
-        f.write("1")
-    assert commitlog.committed_versions(p) == [1]
-    parts, meta = art.load_artifact(spark, p)
-    assert meta["tag"] == "old" and parts["m"].count() == 4
 
 
 def test_expire_keeps_latest(spark, tmp_path):
@@ -1041,40 +1016,6 @@ def test_dsir_score_stream_empty_stream_id_type(spark, tmp_path):
 
 
 # --------------------------------------------- round-9 scale/lifecycle
-
-
-def test_legacy_pointer_migrated_on_first_new_commit(spark, tmp_path):
-    """ADVICE r8 (medium): on a legacy pointer-only store, the FIRST
-    new-protocol write must not un-commit the pointer-era versions —
-    claim_version stamps their markers first, so resolution stays the
-    union of old and new."""
-    import json
-
-    from data_engineering_capstone_project__spark.sources import commitlog
-    from data_engineering_capstone_project__spark.sources.io import (
-        write_versioned,
-    )
-
-    p = str(tmp_path / "legacy_mig")
-    for v, n in ((1, 3), (2, 5)):
-        os.makedirs(os.path.join(p, f"v={v}"))
-        spark.range(n).write.mode("overwrite").parquet(
-            os.path.join(p, f"v={v}")
-        )
-    os.makedirs(os.path.join(p, "v=3"))  # orphan claim beyond pointer
-    with open(os.path.join(p, "LATEST"), "w") as f:
-        f.write("2")
-    assert commitlog.committed_versions(p) == [1, 2]
-    # the new-protocol write lands a marker — legacy versions must
-    # migrate, not vanish (versions 1 and 2 keep resolving; the orphan
-    # v=3 gets claimed/committed by the new writer)
-    new_v = write_versioned(spark.range(7), p)
-    got = commitlog.committed_versions(p)
-    assert 1 in got and 2 in got and new_v in got
-    total = sum(
-        spark.read.parquet(os.path.join(p, f"v={v}")).count() for v in got
-    )
-    assert total == 3 + 5 + 7
 
 
 def test_read_ingest_corpus_single_scan_flat_in_ticks(spark, tmp_path):
@@ -2325,16 +2266,11 @@ def test_compaction_gc_crash_mid_delete_never_resurrects_leftovers(
 
 
 def test_committed_versions_fallback_never_resurrects_fenced(tmp_path):
-    """ADVICE r11 (low): the legacy-LATEST fallback must respect fences.
-    (a) marker-protocol log where EVERY committed version is fenced and
-    LATEST advanced in the commit/fence race -> resolves empty, the
-    pointer must not resurrect fenced versions; (b) true legacy layout
-    (zero markers) with a fenced version -> the fallback filters it."""
-    import os as _os
-
+    """ADVICE r11 (low): fence wins at resolution. A log where EVERY
+    committed version is fenced resolves empty — nothing resurrects a
+    fenced version."""
     from data_engineering_capstone_project__spark.sources import commitlog
 
-    # (a) modern log: commit v1 (advances LATEST), then fence it
     path = str(tmp_path / "modern")
     n, _ = commitlog.claim_version(path)
     commitlog.commit_version(path, n)
@@ -2343,16 +2279,6 @@ def test_committed_versions_fallback_never_resurrects_fenced(tmp_path):
     assert commitlog.committed_versions(path) == []
     with pytest.raises(FileNotFoundError):
         commitlog.latest_version(path)
-
-    # (b) legacy layout built by hand: v=1 and v=2, pointer says 2,
-    # v=2 fenced -> only v=1 resolves via the fallback
-    leg = str(tmp_path / "legacy")
-    for v in (1, 2):
-        _os.makedirs(_os.path.join(leg, f"v={v}"))
-    with open(_os.path.join(leg, commitlog.LATEST), "w") as f:
-        f.write("2")
-    commitlog.fence_version(leg, 2)
-    assert commitlog.committed_versions(leg) == [1]
 
 
 def test_sweep_stale_artifacts(spark, sf_dir, tmp_path, monkeypatch):

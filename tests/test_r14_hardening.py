@@ -153,43 +153,30 @@ def _build_sharded(spark, d, root, n_shards=2):
 
 
 @pytest.mark.slow
-def test_distributed_adjudication_matches_driver(spark, sf_dir, tmp_path):
+def test_distributed_adjudication_matches_driver(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """VERDICT r13 #4: the round-iterative distributed adjudication
     emits EXACTLY the driver replay's retirements — same per-shard
-    counts, hash-equal final unions — and an over-cap candidate set
-    auto-escalates to it instead of raising (the r13 behavior stays
-    available behind distributed=False)."""
+    counts, hash-equal final unions. A candidate count over
+    _DRIVER_MAX_PAIRS takes the distributed path instead of raising."""
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 400)
     r_drv = str(tmp_path / "drv")
     r_dst = str(tmp_path / "dst")
-    r_cap = str(tmp_path / "cap")
-    for r in (r_drv, r_dst, r_cap):
+    for r in (r_drv, r_dst):
         _build_sharded(spark, d, r)
 
     s_drv = shards.reconcile_sharded_near_dups(spark, r_drv)
-    s_dst = shards.reconcile_sharded_near_dups(
-        spark, r_dst, distributed=True
-    )
+    # over the cap: one candidate pair is already too many
+    monkeypatch.setattr(shards, "_DRIVER_MAX_PAIRS", 0)
+    s_dst = shards.reconcile_sharded_near_dups(spark, r_dst)
     assert s_drv["path"] == "driver" and s_dst["path"] == "distributed"
+    assert s_drv["n_pairs"] == s_dst["n_pairs"] > 0
     assert s_drv["n_retired"] == s_dst["n_retired"] > 0
     assert s_drv["retired_per_shard"] == s_dst["retired_per_shard"]
     a = _dig(shards.read_sharded_corpus(spark, r_drv).select("doc_id", "text"))
     b = _dig(shards.read_sharded_corpus(spark, r_dst).select("doc_id", "text"))
     assert a == b
-
-    # over-cap: max_pairs=1 escalates instead of raising, same result
-    s_cap = shards.reconcile_sharded_near_dups(spark, r_cap, max_pairs=1)
-    assert s_cap["path"] == "distributed"
-    assert s_cap["retired_per_shard"] == s_drv["retired_per_shard"]
-    c = _dig(shards.read_sharded_corpus(spark, r_cap).select("doc_id", "text"))
-    assert c == a
-    # the r13 raise is still available explicitly
-    r_raise = str(tmp_path / "raise")
-    _build_sharded(spark, d, r_raise)
-    with pytest.raises(RuntimeError, match="candidate pairs"):
-        shards.reconcile_sharded_near_dups(
-            spark, r_raise, max_pairs=1, distributed=False
-        )
 
 
 def test_reconcile_refuses_duplicate_ids(spark, sf_dir, tmp_path):

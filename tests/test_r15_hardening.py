@@ -149,7 +149,7 @@ def test_retire_frame_marker_heals_from_crash(
 
 @pytest.mark.slow
 def test_reconcile_distributed_retires_frame_valued(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """The distributed adjudication path retires through DataFrame
     slices (VERDICT r14 #5): its _RETIRED CDC notes must appear on the
@@ -174,7 +174,8 @@ def test_reconcile_distributed_retires_frame_valued(
     build(ra)
     build(rb)
     out_d = shards.reconcile_sharded_near_dups(spark, ra)
-    out_x = shards.reconcile_sharded_near_dups(spark, rb, distributed=True)
+    monkeypatch.setattr(shards, "_DRIVER_MAX_PAIRS", 0)
+    out_x = shards.reconcile_sharded_near_dups(spark, rb)
     assert out_d["path"] == "driver" and out_x["path"] == "distributed"
     assert out_d["retired_per_shard"] == out_x["retired_per_shard"]
     assert out_d["n_retired"] > 0
@@ -348,110 +349,19 @@ def test_reshard_digest_divergence_removes_half_built_root(
     assert shards.read_sharded_corpus(spark, nroot).count() == corpus.count()
 
 
-# ------------------------------------------- arrival-stamp backfill
-
-
-def _strip_stamps(spark, shard_root_path):
-    """Simulate a pre-r14 shard: remove _arrival_round from every
-    visible corpus version's payload (keeping claim/commit markers)
-    and rewrite the schema notes to match."""
-    import shutil as _sh
-
-    cpath = os.path.join(shard_root_path, "corpus")
-    for v in ingest._visible_corpus_versions(cpath):
-        vdir = os.path.join(cpath, f"v={v}")
-        df = spark.read.parquet(vdir)
-        if "_arrival_round" not in df.columns:
-            continue
-        stripped = df.drop("_arrival_round").persist()
-        stripped.count()
-        tmp = vdir + "_tmp"
-        stripped.write.parquet(tmp)
-        stripped.unpersist()
-        for fn in os.listdir(vdir):
-            if fn.startswith("part-") or fn == "_SUCCESS":
-                os.remove(os.path.join(vdir, fn))
-        for fn in os.listdir(tmp):
-            if fn.startswith("part-"):
-                _sh.move(os.path.join(tmp, fn), os.path.join(vdir, fn))
-        _sh.rmtree(tmp, ignore_errors=True)
-        ingest._write_schema_note(spark.read.parquet(vdir), cpath, v)
-
-
-@pytest.mark.slow
-def test_backfill_arrival_stamps_converges_legacy_root(
-    spark, sf_dir, tmp_path
-):
-    """VERDICT r14 #4: a wholly pre-stamp root (bootstrap + one tick,
-    stamps stripped) reads every row as round 0, so its cross-shard
-    near-dup ties are permanently mutual survivors — reconcile retires
-    NOTHING. backfill_arrival_stamps restamps each version with its
-    version number (the pre-stamp arrival clock), after which the same
-    root reconciles IDENTICALLY to a born-stamped twin."""
-    d = _docs(spark, sf_dir)
-    corpus = d.filter(F.col("doc_id") % 2 == 0)
-    later = d.filter(F.col("doc_id") % 2 == 1).unionByName(
-        corpus.filter(F.col("doc_id") % 10 == 0).select(
-            (F.col("doc_id") + 700001).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" qz")).alias("text"),
-        )
-    )
-
-    def build(root):
-        shards.init_sharded_ingest(
-            spark, corpus, root, n_shards=2, num_hashes=32, bands=8
-        )
-        shards.ingest_batch_sharded(spark, later, root)
-
-    legacy, twin = str(tmp_path / "legacy"), str(tmp_path / "twin")
-    build(legacy)
-    build(twin)
-    for s in range(2):
-        _strip_stamps(spark, shards.shard_root(legacy, s))
-
-    # pre-backfill posture: all-round-0 ties — nothing retires
-    out0 = shards.reconcile_sharded_near_dups(spark, legacy)
-    assert out0["n_retired"] == 0 and out0["n_pairs"] > 0
-
-    res = shards.backfill_arrival_stamps(spark, legacy)
-    assert res["max_round"] >= 2
-    # idempotent: already-stamped rows untouched, ledger monotone
-    res2 = shards.backfill_arrival_stamps(spark, legacy)
-    assert res2["max_round"] == res["max_round"]
-
-    out_l = shards.reconcile_sharded_near_dups(spark, legacy)
-    out_t = shards.reconcile_sharded_near_dups(spark, twin)
-    assert out_l["retired_per_shard"] == out_t["retired_per_shard"]
-    assert out_l["n_retired"] == out_t["n_retired"] > 0
-
-    def dig(root):
-        return (
-            shards.read_sharded_corpus(spark, root)
-            .agg(
-                F.count("*").alias("n"),
-                F.bit_xor(F.xxhash64("doc_id", "text")).alias("x"),
-            )
-            .first()
-        )
-
-    assert dig(legacy) == dig(twin)
-    # the next tick claims a strictly later round than any backfilled
-    # stamp: a fresh near-dup of legacy content still retires
-    assert shards._current_round(legacy) >= res["max_round"]
-
-
 # ---------------------------------------- band-log candidate generation
 
 
 @pytest.mark.slow
 def test_reconcile_band_log_candidates_match_recompute(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """VERDICT r14 #1: on a VERIFIED root the reconcile candidate pass
     self-joins the persisted per-shard (band, bucket, corpus_id) logs
     instead of re-MinHashing the union's text — and must land
-    HASH-EQUAL to the recompute path AND to the verified single-root
-    golden, including after compaction has folded the band logs."""
+    HASH-EQUAL to the recompute source (swapped in on a twin root)
+    AND to the verified single-root golden, including after compaction
+    has folded the band logs."""
     d = _docs(spark, sf_dir)
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     later = d.filter(F.col("doc_id") % 2 == 1).unionByName(
@@ -480,10 +390,14 @@ def test_reconcile_band_log_candidates_match_recompute(
     pub, _ = ingest.ingest_batch(spark, later, groot)
     pub.unpersist()
 
-    out_log = shards.reconcile_sharded_near_dups(spark, ra)  # auto: logs
-    out_rec = shards.reconcile_sharded_near_dups(
-        spark, rb, use_band_logs=False
-    )
+    out_log = shards.reconcile_sharded_near_dups(spark, ra)
+    assert out_log["candidates"] == "band_logs"
+    with monkeypatch.context() as m:
+        m.setattr(
+            shards, "_band_log_rows", shards._recomputed_band_rows
+        )
+        out_rec = shards.reconcile_sharded_near_dups(spark, rb)
+    assert out_log["n_pairs"] == out_rec["n_pairs"]
     assert out_log["n_retired"] == out_rec["n_retired"] > 0
     assert out_log["retired_per_shard"] == out_rec["retired_per_shard"]
 
@@ -506,24 +420,6 @@ def test_reconcile_band_log_candidates_match_recompute(
     assert dig(
         shards.read_sharded_corpus(spark, ra).select("doc_id", "text")
     ) == g
-
-
-def test_reconcile_band_logs_refused_on_unverified_root(
-    spark, sf_dir, tmp_path
-):
-    """An id-less minhash_bands root cannot source candidate PAIRS
-    from its logs: use_band_logs=True refuses loudly; the default
-    (auto) silently stays on the recompute path."""
-    d = _docs(spark, sf_dir)
-    corpus = d.filter(F.col("doc_id") < 150)
-    root = str(tmp_path / "r")
-    shards.init_sharded_ingest(
-        spark, corpus, root, n_shards=2, num_hashes=32, bands=8
-    )
-    with pytest.raises(ValueError, match="minhash_bands"):
-        shards.reconcile_sharded_near_dups(spark, root, use_band_logs=True)
-    out = shards.reconcile_sharded_near_dups(spark, root)  # recompute path
-    assert out["n_retired"] == 0
 
 
 # ------------------------------------------- snapshot-then-catchup
@@ -647,29 +543,50 @@ def test_reshard_catchup_divergence_cleans_and_raises(
         assert not os.path.exists(shards.shard_root(nroot, s))
 
 
-def test_partially_stamped_root_reads_and_reshards(
-    spark, sf_dir, tmp_path
+def test_reshard_catchup_after_one_shard_tick_crash(
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """ADVICE r14 (first low): a root where only SOME shards carry
-    _arrival_round (one shard stripped to simulate a pre-stamp
-    publisher) must read with with_arrival=True (missing column fills
-    NULL via allowMissingColumns) and reshard cleanly — stripped rows
-    land round-0 semantics, stamped rows carry verbatim."""
+    """A sharded tick that crashed before shard 0's corpus commit but
+    committed on shard 1: shard 1 holds the tick's round r, so the
+    catchup snapshot's R0 is r, and the rows phase B's recovery
+    completes on shard 0 are stamped r as well. reshard(catchup=True)
+    must carry them (not fail the digest gate on every attempt) and
+    land the same union as a plain reshard of the recovered root."""
     d = _docs(spark, sf_dir)
-    corpus = d.filter(F.col("doc_id") < 150)
-    root = str(tmp_path / "r")
+    corpus = d.filter(F.col("doc_id") < 200)
+    tick = d.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 260))
+    root = str(tmp_path / "old")
     shards.init_sharded_ingest(
         spark, corpus, root, n_shards=2, num_hashes=32, bands=8
     )
-    _strip_stamps(spark, shards.shard_root(root, 0))
+    crash_path = os.path.join(shards.shard_root(root, 0), "corpus")
+    real = ingest.commit_versioned
 
-    u = shards.read_sharded_corpus(spark, root, with_arrival=True)
-    assert "_arrival_round" in u.columns
-    assert u.count() == corpus.count()
-    n_null = u.filter(F.col("_arrival_round").isNull()).count()
-    assert 0 < n_null < corpus.count()  # genuinely mixed
+    def crash_on_shard0(path, n):
+        if path == crash_path:
+            raise RuntimeError("injected crash before shard 0's commit")
+        return real(path, n)
 
-    nroot = str(tmp_path / "n")
-    res = shards.reshard(spark, root, nroot, n_shards=3)
-    assert res["n_shards"] == 3
-    assert shards.read_sharded_corpus(spark, nroot).count() == corpus.count()
+    monkeypatch.setattr(ingest, "commit_versioned", crash_on_shard0)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        shards.ingest_batch_sharded(spark, tick, root)
+    monkeypatch.setattr(ingest, "commit_versioned", real)
+
+    def max_round(shard):
+        return ingest.read_ingest_corpus(
+            spark, shards.shard_root(root, shard), with_arrival=True
+        ).agg(F.max("_arrival_round")).first()[0]
+
+    # the precondition: the tick's round is committed on shard 1 only
+    assert max_round(1) == 2 and max_round(0) == 1
+
+    res = shards.reshard(
+        spark, root, str(tmp_path / "catchup"), n_shards=3, catchup=True
+    )
+    assert res["n_catchup"] > 0  # shard 0's recovered rows
+    assert max_round(0) == 2
+    plain = shards.reshard(spark, root, str(tmp_path / "plain"), n_shards=3)
+    assert res["digest"] == plain["digest"]
+    assert res["n_docs"] == plain["n_docs"] == (
+        shards.read_sharded_corpus(spark, root).count()
+    )

@@ -493,26 +493,30 @@ def test_stream_loop_reconcile_cadence(spark, sf_dir, tmp_path):
 
 _FUZZ_PARITY_CASES = [
     (0, 2, 7, " zq extra", None),
-    (1, 3, 5, " yx", True),
+    (1, 3, 5, " yx", 0),
     (2, 2, 3, " mutated tail token", None),
 ]
 
 
 @pytest.mark.parametrize(
-    "trial,n_shards,mod,suffix,distributed",
+    "trial,n_shards,mod,suffix,driver_max_pairs",
     # fast profile: one case (2 shards, mutated-tail near-dups); the
     # 3-shard + DISTRIBUTED-adjudication case and the rest run in full
     prof(_FUZZ_PARITY_CASES[2:3], _FUZZ_PARITY_CASES),
 )
 def test_reconcile_fuzz_parity(
-    spark, sf_dir, tmp_path, trial, n_shards, mod, suffix, distributed
+    spark, sf_dir, tmp_path, monkeypatch, trial, n_shards, mod, suffix,
+    driver_max_pairs,
 ):
     """Adversarial parity fuzz (the r12 BM25-fuzz pattern): varying
     shard counts, planted-near-dup densities, mutation shapes — and,
-    r14, the adjudication path (trial 1 runs the DISTRIBUTED
-    round-iterative path) — sharded ingest + reconciliation must end
+    r14, the adjudication path (trial 1 lowers the driver cap to 0, so
+    it runs the DISTRIBUTED round-iterative path; None keeps the
+    module default) — sharded ingest + reconciliation must end
     HASH-EQUAL to a single-root run of the same history, every
     trial."""
+    if driver_max_pairs is not None:
+        monkeypatch.setattr(shards, "_DRIVER_MAX_PAIRS", driver_max_pairs)
     d = _docs(spark, sf_dir)
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     planted = corpus.filter(F.col("doc_id") % mod == 0).select(
@@ -529,7 +533,10 @@ def test_reconcile_fuzz_parity(
     shards.ingest_batch_sharded(spark, batch, sroot)
     pub, _ = ingest.ingest_batch(spark, batch, groot)
     pub.unpersist()
-    shards.reconcile_sharded_near_dups(spark, sroot, distributed=distributed)
+    out = shards.reconcile_sharded_near_dups(spark, sroot)
+    assert out["path"] == (
+        "driver" if driver_max_pairs is None else "distributed"
+    )
     a = _dig(shards.read_sharded_corpus(spark, sroot).select("doc_id", "text"))
     b = _dig(ingest.read_ingest_corpus(spark, groot).select("doc_id", "text"))
     assert a == b

@@ -1,179 +1,187 @@
-"""Measure the r14 cross-shard reconciliation paths on a synthetic
-ladder: a sharded root with planted cross-shard near-dups (1% of the
-corpus re-arrives under fresh ids with a one-token mutation), corpus
-growing 5× per rung, reconciled once per path on twin roots.
+"""Ladders for ``plans.shards.reconcile_sharded_near_dups``.
 
-Claims under test:
+**Adjudication ladder** (default): a 2-shard root (default banding) is
+bootstrapped with a synthetic corpus of ~260-byte documents, then one sharded tick brings fresh
+documents plus 10 % planted near-dups of the corpus (a one-token suffix under
+fresh ids, so content routing scatters them across shards). Each rung builds
+twin roots per repetition and reconciles one on each adjudication path; the
+arm that runs first alternates between repetitions:
 
-1. **Driver path** (default): the banded pass is O(union) and the
-   adjudication is pair-sized — seconds should track the union scan,
-   with the pair collect a small constant.
-2. **Distributed path** (``distributed=True`` — the over-cap
-   auto-escalation target, VERDICT r13 #4): same banded pass plus one
-   anti-join per arrival round (two rounds here) — the per-rung DELTA
-   vs the driver path is the price of never collecting a pair, which
-   is what an over-cap corpus pays instead of raising.
-3. Both paths retire the SAME count (parity is unit/fuzz-pinned
-   elsewhere; the ladder re-checks the counts as a cheap invariant).
-4. **Band-log candidate pass** (r15, VERDICT r14 #1): on VERIFIED
-   roots the candidate relation self-joins the persisted per-shard
-   (band, bucket, corpus_id) logs — O(index log) — instead of
-   re-shingling + re-MinHashing the union's text; the verified-log
-   vs verified-recompute arm pair measures exactly that delta, with
-   identical retirements as the invariant.
+- ``driver``: the module default, which collects the candidate pairs while
+  their count is at most ``shards._DRIVER_MAX_PAIRS``;
+- ``distributed``: the same call with ``_DRIVER_MAX_PAIRS`` set to 0, so any
+  candidate pair takes the round-iterative anti-join path.
 
-Usage: python tools/reconcile_ladder.py [rung ...]  (default 20000 100000)
+Per arm it prints the median wall time of the reconcile call, its Spark job
+count (status-tracker job group) and in how many repetitions the arm was the
+faster one, and checks that both arms retire the same number of documents.
+
+**Candidate ladder** (``--candidates``): on a VERIFIED root with a clean
+corpus of ~1.3 KB documents (no planted dups, so the time is candidate
+generation plus an empty verify), band-log candidates (the verified-root
+source) against re-MinHashing the union's text (the source id-less roots use,
+swapped in via ``shards._band_log_rows``).
+
+Usage::
+
+    python tools/reconcile_ladder.py [--reps N] [docs ...]   # 100 1000 10000, 5 reps
+    python tools/reconcile_ladder.py --candidates [docs ...]  # 20000 100000
+
+Set ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` to size the session.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import statistics
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_engineering_capstone_project__spark.plans import (  # noqa: E402
-    ingest,
-    shards,
-)
+from data_engineering_capstone_project__spark.plans import shards  # noqa: E402
 from data_engineering_capstone_project__spark.session import get_spark  # noqa: E402
 
-RUNGS = ["20000", "100000"]
 
-
-def synth(spark, lo: int, hi: int):
+def synth(spark, lo: int, hi: int, blocks: int):
+    """Documents of ``blocks`` distinct 64-char hex blocks each: unrelated
+    documents share almost no shingles, so candidate pairs come from the
+    planted near-dups, not from a shared template."""
     return spark.range(lo, hi).select(
         F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("ladder reconciliation document body "),
-            F.col("id"),
-            F.lit(" with distinct filler tokens "),
-            F.sha2(F.col("id").cast("string"), 256),
+        F.concat_ws(
+            " ",
+            *[
+                F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(i))), 256)
+                for i in range(blocks)
+            ],
         ).alias("text"),
     )
 
 
-def main() -> None:
-    rungs = sys.argv[1:] or RUNGS
-    spark = get_spark(
-        app_name="reconcile_ladder", master="local[32]",
-        shuffle_partitions=32,
-    )
+def timed(spark, group: str, fn):
+    """Run ``fn()`` in its own job group; return (result, seconds, jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    try:
+        out = fn()
+    finally:
+        secs = time.perf_counter() - t0
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup(None, None)
+    return out, secs, jobs
+
+
+def adjudication(spark, rungs: list[int], reps: int) -> None:
     print(
-        f"{'rung':>8} {'arm->path':>22} {'n_pairs':>9} {'n_retired':>10} "
-        f"{'reconcile_s':>12}"
+        "| docs | arm | path | candidate pairs | retired | "
+        "median reconcile (s) | jobs | faster in |\n"
+        "|---:|---|---|---:|---:|---:|---:|---:|"
     )
-    for rung in rungs:
-        n = int(rung)
-        base = tempfile.mkdtemp(prefix=f"recl_{rung}_")
-        cpath, bpath = f"{base}/corpus", f"{base}/batch"
-        synth(spark, 0, n).write.parquet(cpath)
-        corpus = spark.read.parquet(cpath)
-        # batch: fresh docs + 1% planted near-dups of corpus content
-        fresh = synth(spark, n, n + n // 10)
-        planted = corpus.filter(F.col("doc_id") % 100 == 0).select(
+    default_cap = shards._DRIVER_MAX_PAIRS
+    for n in rungs:
+        base = tempfile.mkdtemp(prefix=f"recl_{n}_")
+        synth(spark, 0, n, 4).write.parquet(f"{base}/corpus")
+        corpus = spark.read.parquet(f"{base}/corpus")
+        planted = corpus.filter(F.col("doc_id") % 10 == 0).select(
             (F.col("doc_id") + 10_000_000).alias("doc_id"),
             F.concat(F.col("text"), F.lit(" qz")).alias("text"),
         )
-        fresh.unionByName(planted).write.parquet(bpath)
-        batch = spark.read.parquet(bpath)
-
-        rows = []
-        arms = (
-            ("default", None, {}),
-            ("distributed", True, {}),
-            ("ver-log", None, {"verified": True}),
-            ("ver-recompute", None, {"verified": True,
-                                     "use_band_logs": False}),
+        synth(spark, n, n + n // 10, 4).unionByName(planted).write.parquet(
+            f"{base}/batch"
         )
-        for arm, dist, opts in arms:
-            root = f"{base}/{arm}/r"
-            init_kw = (
-                {"verify_jaccard_threshold": 0.8}
-                if opts.get("verified")
-                else {}
-            )
-            shards.init_sharded_ingest(
-                spark, corpus, root, n_shards=2, **init_kw
-            )
-            shards.ingest_batch_sharded(spark, batch, root)
-            t0 = time.time()
-            st = shards.reconcile_sharded_near_dups(
-                spark, root, distributed=dist,
-                use_band_logs=opts.get("use_band_logs"),
-            )
-            secs = time.time() - t0
-            # the default arm REPORTS the path it actually took — an
-            # over-cap rung auto-escalates to distributed by design
-            # (VERDICT r13 #4), which is itself a ladder observation
-            label = f"{arm}->{st['path']}"
-            rows.append((arm, label, st["n_pairs"], st["n_retired"], secs))
-            print(
-                f"{rung:>8} {label:>22} {st['n_pairs']:>9} "
-                f"{st['n_retired']:>10} {secs:>12.2f}"
-            )
-        by_arm = {r[0]: r for r in rows}
-        assert (
-            by_arm["default"][3] == by_arm["distributed"][3]
-        ), "unverified arm retirement counts diverged"
-        assert (
-            by_arm["ver-log"][3] == by_arm["ver-recompute"][3]
-        ), "verified arm retirement counts diverged"
-
-    # ---- candidate-pass microbench (VERDICT r14 #1) ----------------
-    # The arms above measure END-TO-END reconcile on short template
-    # text, where retirement dominates and re-MinHashing is
-    # artificially cheap. The claim under test — candidate generation
-    # O(index log), not O(union text) — needs documents whose TEXT is
-    # expensive to re-shingle and a CLEAN corpus (no planted dups), so
-    # reconcile_s ≈ the candidate pass + an empty verify. ~1.3 KB docs
-    # (LLM-pipeline scale is KBs-to-MBs; the gap grows with length).
-    print(
-        f"\n{'rung':>8} {'candidate arm':>18} {'n_pairs':>9} "
-        f"{'reconcile_s':>12}   (clean corpus, ~1.3KB docs)"
-    )
-    for rung in rungs:
-        n = int(rung)
-        base = tempfile.mkdtemp(prefix=f"reclc_{rung}_")
-        cpath = f"{base}/corpus"
-        spark.range(0, n).select(
-            F.col("id").alias("doc_id"),
-            F.concat(
-                F.lit("candidate ladder long document body "),
-                F.col("id").cast("string"),
-                F.lit(" "),
-                # 20 distinct 64-char blocks -> ~1.3 KB of unique text
-                *[
-                    F.sha2(
-                        F.concat(
-                            F.col("id").cast("string"), F.lit(str(i))
+        batch = spark.read.parquet(f"{base}/batch")
+        runs: dict[str, list] = {"driver": [], "distributed": []}
+        arms = [("driver", default_cap), ("distributed", 0)]
+        for rep in range(reps):
+            for arm, cap in arms[::-1] if rep % 2 else arms:
+                root = f"{base}/{arm}{rep}"
+                shards.init_sharded_ingest(spark, corpus, root, n_shards=2)
+                shards.ingest_batch_sharded(spark, batch, root)
+                shards._DRIVER_MAX_PAIRS = cap
+                try:
+                    st, secs, jobs = timed(
+                        spark, f"recl-{n}-{arm}-{rep}",
+                        lambda: shards.reconcile_sharded_near_dups(
+                            spark, root
                         ),
-                        256,
                     )
-                    for i in range(20)
-                ],
-            ).alias("text"),
-        ).write.parquet(cpath)
-        corpus = spark.read.parquet(cpath)
-        for arm, ubl in (("ver-log", None), ("ver-recompute", False)):
-            root = f"{base}/{arm}/r"
+                finally:
+                    shards._DRIVER_MAX_PAIRS = default_cap
+                runs[arm].append((st, secs, jobs))
+        shutil.rmtree(base, ignore_errors=True)
+        retired = {r[0]["n_retired"] for rs in runs.values() for r in rs}
+        assert len(retired) == 1, f"arms retired different counts: {retired}"
+        for arm, rs in runs.items():
+            other = runs["distributed" if arm == "driver" else "driver"]
+            wins = sum(r[1] < o[1] for r, o in zip(rs, other))
+            st = rs[0][0]
+            print(
+                f"| {n} | {arm} | {st['path']} | {st['n_pairs']} | "
+                f"{st['n_retired']} | "
+                f"{statistics.median(r[1] for r in rs):.2f} | "
+                f"{statistics.median(r[2] for r in rs):.0f} | "
+                f"{wins}/{reps} |",
+                flush=True,
+            )
+
+
+def candidates(spark, rungs: list[int]) -> None:
+    print(
+        "| docs (~1.3 KB) | candidate source | candidate pairs | "
+        "reconcile (s) | jobs |\n|---:|---|---:|---:|---:|"
+    )
+    band_logs = shards._band_log_rows
+    for n in rungs:
+        base = tempfile.mkdtemp(prefix=f"reclc_{n}_")
+        synth(spark, 0, n, 20).write.parquet(f"{base}/corpus")
+        corpus = spark.read.parquet(f"{base}/corpus")
+        for arm, source in (
+            ("band_logs", band_logs),
+            ("recompute", shards._recomputed_band_rows),
+        ):
+            root = f"{base}/{arm}"
             shards.init_sharded_ingest(
-                spark, corpus, root, n_shards=2,
-                verify_jaccard_threshold=0.8,
+                spark, corpus, root, n_shards=2, verify_jaccard_threshold=0.8
             )
-            t0 = time.time()
-            st = shards.reconcile_sharded_near_dups(
-                spark, root, use_band_logs=ubl
-            )
-            secs = time.time() - t0
+            shards._band_log_rows = source
+            try:
+                st, secs, jobs = timed(
+                    spark, f"reclc-{n}-{arm}",
+                    lambda: shards.reconcile_sharded_near_dups(spark, root),
+                )
+            finally:
+                shards._band_log_rows = band_logs
             assert st["n_retired"] == 0, "clean corpus retired docs"
             print(
-                f"{rung:>8} {arm:>18} {st['n_pairs']:>9} {secs:>12.2f}"
+                f"| {n} | {arm} | {st['n_pairs']} | {secs:.2f} | {jobs} |",
+                flush=True,
             )
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def main(args: list[str]) -> int:
+    reps = 5
+    if "--reps" in args:
+        i = args.index("--reps")
+        reps = int(args[i + 1])
+        del args[i:i + 2]
+    cand = "--candidates" in args
+    rungs = [int(a) for a in args if a != "--candidates"]
+    spark = get_spark(app_name="reconcile_ladder")
+    spark.sparkContext.setLogLevel("ERROR")
+    if cand:
+        candidates(spark, rungs or [20000, 100000])
+    else:
+        adjudication(spark, rungs or [100, 1000, 10000], reps)
+    spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main(sys.argv[1:]))

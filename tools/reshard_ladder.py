@@ -1,35 +1,43 @@
-"""Measure the reshard quiesce window (VERDICT r14 #2): the r13 fix
-made `reshard()` ACQUIRE every old shard's lease for its whole
-duration — correctness landed, cost unmeasured. While the leases are
-held, ingest is DOWN: the call re-routes the whole union, refits each
-new shard's codebook, and rebuilds every per-shard index (fp, mh,
-BM25 when present) from scratch. This ladder puts a number on that
-window vs corpus size, with and without a BM25 posting log (the
-heaviest rebuilt surface), so the snapshot-then-catchup decision is
-measured, not guessed.
+"""Reshard ladder: wall time, ingest-downtime window and Spark jobs of
+``plans.shards.reshard``, plain against catchup, with and without a BM25
+posting log (the heaviest rebuilt surface).
 
-reshard_s IS the leases-held window: the lease acquisition is the
-first thing the call does and release is in its finally.
+Each rung bootstraps a 2-shard root from a synthetic corpus and reshards it
+to 4 shards, once per arm; repetitions alternate the arms. Plain reshard
+holds every old shard's lease for the whole call, so its leased window is
+its wall time; catchup reports its own window (``leased_s``: lease
+acquisition to declaration). Jobs are the call's status-tracker job group.
+The table prints medians over the repetitions.
 
-Usage: python tools/reshard_ladder.py [rung ...]  (default 20000 100000)
+Usage::
+
+    python tools/reshard_ladder.py [--reps N] [docs ...]   # 20000 100000, 1 rep
+
+Set ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` to size the session.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import statistics
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_engineering_capstone_project__spark.plans import (  # noqa: E402
-    shards,
-)
+from data_engineering_capstone_project__spark.plans import shards  # noqa: E402
 from data_engineering_capstone_project__spark.session import get_spark  # noqa: E402
 
-RUNGS = ["20000", "100000"]
+ARMS = (
+    ("plain", {}, False),
+    ("catchup", {}, True),
+    ("bm25", {"bm25_index": True}, False),
+    ("bm25+catchup", {"bm25_index": True}, True),
+)
 
 
 def synth(spark, lo: int, hi: int):
@@ -44,44 +52,54 @@ def synth(spark, lo: int, hi: int):
     )
 
 
-def main() -> None:
-    rungs = sys.argv[1:] or RUNGS
-    spark = get_spark(
-        app_name="reshard_ladder", master="local[32]",
-        shuffle_partitions=32,
-    )
+def main(args: list[str]) -> int:
+    reps = 1
+    if "--reps" in args:
+        i = args.index("--reps")
+        reps = int(args[i + 1])
+        del args[i:i + 2]
+    rungs = [int(a) for a in args] or [20000, 100000]
+    spark = get_spark(app_name="reshard_ladder")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     print(
-        f"{'rung':>8} {'arm':>12} {'n_docs':>9} {'reshard_s':>10} "
-        f"{'(leased_s = ingest-downtime window)'}"
+        "| docs | arm | median wall (s) | median leased (s) | jobs |\n"
+        "|---:|---|---:|---:|---:|"
     )
-    for rung in rungs:
-        n = int(rung)
-        base = tempfile.mkdtemp(prefix=f"rshl_{rung}_")
-        cpath = f"{base}/corpus"
-        synth(spark, 0, n).write.parquet(cpath)
-        corpus = spark.read.parquet(cpath)
-        for arm, init_kw, ckw in (
-            ("plain", {}, {}),
-            ("bm25", {"bm25_index": True}, {}),
-            ("bm25+catchup", {"bm25_index": True}, {"catchup": True}),
-        ):
-            root = f"{base}/{arm}/old"
-            shards.init_sharded_ingest(
-                spark, corpus, root, n_shards=2, **init_kw
-            )
-            t0 = time.time()
-            res = shards.reshard(
-                spark, root, f"{base}/{arm}/new", n_shards=4, **ckw
-            )
-            secs = time.time() - t0
-            # plain reshard is leased wall-to-wall; catchup reports
-            # its own (much smaller) leased window
-            leased = res.get("leased_s", secs)
+    for n in rungs:
+        base = tempfile.mkdtemp(prefix=f"rshl_{n}_")
+        synth(spark, 0, n).write.parquet(f"{base}/corpus")
+        corpus = spark.read.parquet(f"{base}/corpus")
+        runs: dict[str, list] = {arm: [] for arm, _, _ in ARMS}
+        for rep in range(reps):
+            for arm, init_kw, catchup in ARMS:
+                root = f"{base}/{arm}{rep}"
+                shards.init_sharded_ingest(
+                    spark, corpus, f"{root}/old", n_shards=2, **init_kw
+                )
+                group = f"rshl-{n}-{arm}-{rep}"
+                sc.setJobGroup(group, group)
+                t0 = time.perf_counter()
+                res = shards.reshard(
+                    spark, f"{root}/old", f"{root}/new", n_shards=4,
+                    catchup=catchup,
+                )
+                wall = time.perf_counter() - t0
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                sc.setJobGroup(None, None)
+                assert res["n_docs"] == n, res
+                runs[arm].append((wall, res.get("leased_s", wall), jobs))
+        shutil.rmtree(base, ignore_errors=True)
+        for arm, rs in runs.items():
             print(
-                f"{rung:>8} {arm:>12} {res['n_docs']:>9} {secs:>10.2f}"
-                f"   leased_s={leased:.2f}"
+                f"| {n} | {arm} | {statistics.median(r[0] for r in rs):.1f}"
+                f" | {statistics.median(r[1] for r in rs):.1f} | "
+                f"{statistics.median(r[2] for r in rs):.0f} |",
+                flush=True,
             )
+    spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main(sys.argv[1:]))
