@@ -908,10 +908,11 @@ def sweep_sharded_artifacts(
 
 
 # Candidate pairs up to this count adjudicate on the driver, more than it
-# distributed. Each path wins on some input (SCALING.md "Reconcile
-# adjudication ladder"): the driver at 7–497 pairs, distributed at
-# 595,882.
-_DRIVER_MAX_PAIRS = 1_000_000
+# distributed. Set at the crossover of SCALING.md "Reconcile adjudication
+# ladder" (4 cores, 10,000 docs): the driver is faster up to ~3,400 pairs,
+# the two are within noise at 9,000–113,000, and distributed is faster at
+# 286,000 and 602,000.
+_DRIVER_MAX_PAIRS = 100_000
 
 
 def reconcile_sharded_near_dups(spark: SparkSession, root: str) -> dict:

@@ -1,20 +1,28 @@
 """Ladders for ``plans.shards.reconcile_sharded_near_dups``.
 
 **Adjudication ladder** (default): a 2-shard root (default banding) is
-bootstrapped with a synthetic corpus of ~260-byte documents, then one sharded tick brings fresh
-documents plus 10 % planted near-dups of the corpus (a one-token suffix under
-fresh ids, so content routing scatters them across shards). Each rung builds
-twin roots per repetition and reconciles one on each adjudication path; the
-arm that runs first alternates between repetitions:
+bootstrapped with a synthetic corpus of ~260-byte documents, then one sharded
+tick brings fresh documents plus 10 % planted near-dups of the corpus (a
+one-token suffix under fresh ids, so content routing scatters them across
+shards). A rung is ``DOCS`` or ``DOCS:FAMILY``: with a family size above 1,
+consecutive ids share three of their four text blocks, so each family's
+members collide with one another and the candidate count grows roughly
+with ``DOCS * FAMILY / 2`` (3,408 to 602,338 pairs for families 2 to 200
+at 10,000 docs). Same-round pairs both survive, so only the planted
+near-dups that the tick's shard-local probe let through retire. Each
+rung builds twin roots per repetition and reconciles one on each adjudication
+path; the arm that runs first alternates between repetitions:
 
-- ``driver``: the module default, which collects the candidate pairs while
-  their count is at most ``shards._DRIVER_MAX_PAIRS``;
-- ``distributed``: the same call with ``_DRIVER_MAX_PAIRS`` set to 0, so any
-  candidate pair takes the round-iterative anti-join path.
+- ``driver``: ``shards._DRIVER_MAX_PAIRS`` raised past any count, so the
+  candidate pairs are collected and replayed in-process;
+- ``distributed``: ``_DRIVER_MAX_PAIRS`` set to 0, so any candidate pair
+  takes the round-iterative anti-join path.
 
 Per arm it prints the median wall time of the reconcile call, its Spark job
 count (status-tracker job group) and in how many repetitions the arm was the
 faster one, and checks that both arms retire the same number of documents.
+The ``default`` column names the path the module constant picks at that
+candidate count.
 
 **Candidate ladder** (``--candidates``): on a VERIFIED root with a clean
 corpus of ~1.3 KB documents (no planted dups, so the time is candidate
@@ -24,7 +32,7 @@ swapped in via ``shards._band_log_rows``).
 
 Usage::
 
-    python tools/reconcile_ladder.py [--reps N] [docs ...]   # 100 1000 10000, 5 reps
+    python tools/reconcile_ladder.py [--reps N] [docs[:family] ...]   # 100 1000 10000, 5 reps
     python tools/reconcile_ladder.py --candidates [docs ...]  # 20000 100000
 
 Set ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY`` to size the session.
@@ -47,18 +55,23 @@ from data_engineering_capstone_project__spark.plans import shards  # noqa: E402
 from data_engineering_capstone_project__spark.session import get_spark  # noqa: E402
 
 
-def synth(spark, lo: int, hi: int, blocks: int):
-    """Documents of ``blocks`` distinct 64-char hex blocks each: unrelated
-    documents share almost no shingles, so candidate pairs come from the
-    planted near-dups, not from a shared template."""
+def synth(spark, lo: int, hi: int, blocks: int, family: int = 1):
+    """Documents of ``blocks`` 64-char hex blocks each. Unrelated documents
+    share almost no shingles, so with ``family`` 1 candidate pairs come from
+    the planted near-dups only. With a larger ``family``, the ids of one
+    ``id // family`` group share all blocks but the last."""
+
+    def key(i: int):
+        if family > 1 and i < blocks - 1:
+            group = F.floor(F.col("id") / family).cast("string")
+            return F.concat(F.lit("f"), group)
+        return F.col("id").cast("string")
+
     return spark.range(lo, hi).select(
         F.col("id").alias("doc_id"),
         F.concat_ws(
             " ",
-            *[
-                F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(i))), 256)
-                for i in range(blocks)
-            ],
+            *[F.sha2(F.concat(key(i), F.lit(str(i))), 256) for i in range(blocks)],
         ).alias("text"),
     )
 
@@ -77,27 +90,29 @@ def timed(spark, group: str, fn):
     return out, secs, jobs
 
 
-def adjudication(spark, rungs: list[int], reps: int) -> None:
+def adjudication(spark, rungs: list[str], reps: int) -> None:
     print(
-        "| docs | arm | path | candidate pairs | retired | "
-        "median reconcile (s) | jobs | faster in |\n"
-        "|---:|---|---|---:|---:|---:|---:|---:|"
+        "| docs | family | arm | candidate pairs | retired | "
+        "median reconcile (s) | jobs | faster in | default |\n"
+        "|---:|---:|---|---:|---:|---:|---:|---:|---|"
     )
     default_cap = shards._DRIVER_MAX_PAIRS
-    for n in rungs:
-        base = tempfile.mkdtemp(prefix=f"recl_{n}_")
-        synth(spark, 0, n, 4).write.parquet(f"{base}/corpus")
+    for rung in rungs:
+        n, _, fam = rung.partition(":")
+        n, fam = int(n), int(fam or 1)
+        base = tempfile.mkdtemp(prefix=f"recl_{n}_{fam}_")
+        synth(spark, 0, n, 4, fam).write.parquet(f"{base}/corpus")
         corpus = spark.read.parquet(f"{base}/corpus")
         planted = corpus.filter(F.col("doc_id") % 10 == 0).select(
             (F.col("doc_id") + 10_000_000).alias("doc_id"),
             F.concat(F.col("text"), F.lit(" qz")).alias("text"),
         )
-        synth(spark, n, n + n // 10, 4).unionByName(planted).write.parquet(
+        synth(spark, n, n + n // 10, 4, fam).unionByName(planted).write.parquet(
             f"{base}/batch"
         )
         batch = spark.read.parquet(f"{base}/batch")
         runs: dict[str, list] = {"driver": [], "distributed": []}
-        arms = [("driver", default_cap), ("distributed", 0)]
+        arms = [("driver", sys.maxsize), ("distributed", 0)]
         for rep in range(reps):
             for arm, cap in arms[::-1] if rep % 2 else arms:
                 root = f"{base}/{arm}{rep}"
@@ -121,12 +136,16 @@ def adjudication(spark, rungs: list[int], reps: int) -> None:
             other = runs["distributed" if arm == "driver" else "driver"]
             wins = sum(r[1] < o[1] for r, o in zip(rs, other))
             st = rs[0][0]
+            assert st["path"] == arm, f"{arm} arm took the {st['path']} path"
+            default = (
+                "driver" if st["n_pairs"] <= default_cap else "distributed"
+            )
             print(
-                f"| {n} | {arm} | {st['path']} | {st['n_pairs']} | "
+                f"| {n} | {fam} | {arm} | {st['n_pairs']} | "
                 f"{st['n_retired']} | "
                 f"{statistics.median(r[1] for r in rs):.2f} | "
                 f"{statistics.median(r[2] for r in rs):.0f} | "
-                f"{wins}/{reps} |",
+                f"{wins}/{reps} | {default} |",
                 flush=True,
             )
 
@@ -172,13 +191,13 @@ def main(args: list[str]) -> int:
         reps = int(args[i + 1])
         del args[i:i + 2]
     cand = "--candidates" in args
-    rungs = [int(a) for a in args if a != "--candidates"]
+    rungs = [a for a in args if a != "--candidates"]
     spark = get_spark(app_name="reconcile_ladder")
     spark.sparkContext.setLogLevel("ERROR")
     if cand:
-        candidates(spark, rungs or [20000, 100000])
+        candidates(spark, [int(a) for a in rungs] or [20000, 100000])
     else:
-        adjudication(spark, rungs or [100, 1000, 10000], reps)
+        adjudication(spark, rungs or ["100", "1000", "10000"], reps)
     spark.stop()
     return 0
 

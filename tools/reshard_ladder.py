@@ -3,11 +3,13 @@
 posting log (the heaviest rebuilt surface).
 
 Each rung bootstraps a 2-shard root from a synthetic corpus and reshards it
-to 4 shards, once per arm; repetitions alternate the arms. Plain reshard
+to 4 shards, once per arm; odd repetitions run the arms in reverse order, so
+each catchup arm and its plain twin take turns running first. Plain reshard
 holds every old shard's lease for the whole call, so its leased window is
 its wall time; catchup reports its own window (``leased_s``: lease
 acquisition to declaration). Jobs are the call's status-tracker job group.
-The table prints medians over the repetitions.
+The table prints medians over the repetitions and, for each catchup arm, in
+how many repetitions it had a lower wall time than its plain twin.
 
 Usage::
 
@@ -63,8 +65,9 @@ def main(args: list[str]) -> int:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     print(
-        "| docs | arm | median wall (s) | median leased (s) | jobs |\n"
-        "|---:|---|---:|---:|---:|"
+        "| docs | arm | median wall (s) | median leased (s) | jobs | "
+        "faster than plain twin |\n"
+        "|---:|---|---:|---:|---:|---:|"
     )
     for n in rungs:
         base = tempfile.mkdtemp(prefix=f"rshl_{n}_")
@@ -72,7 +75,7 @@ def main(args: list[str]) -> int:
         corpus = spark.read.parquet(f"{base}/corpus")
         runs: dict[str, list] = {arm: [] for arm, _, _ in ARMS}
         for rep in range(reps):
-            for arm, init_kw, catchup in ARMS:
+            for arm, init_kw, catchup in ARMS[::-1] if rep % 2 else ARMS:
                 root = f"{base}/{arm}{rep}"
                 shards.init_sharded_ingest(
                     spark, corpus, f"{root}/old", n_shards=2, **init_kw
@@ -91,10 +94,14 @@ def main(args: list[str]) -> int:
                 runs[arm].append((wall, res.get("leased_s", wall), jobs))
         shutil.rmtree(base, ignore_errors=True)
         for arm, rs in runs.items():
+            wins = ""
+            if arm.endswith("catchup"):
+                twin = runs[arm.removesuffix("catchup").rstrip("+") or "plain"]
+                wins = f"{sum(r[0] < t[0] for r, t in zip(rs, twin))}/{reps}"
             print(
                 f"| {n} | {arm} | {statistics.median(r[0] for r in rs):.1f}"
                 f" | {statistics.median(r[1] for r in rs):.1f} | "
-                f"{statistics.median(r[2] for r in rs):.0f} |",
+                f"{statistics.median(r[2] for r in rs):.0f} | {wins} |",
                 flush=True,
             )
     spark.stop()
